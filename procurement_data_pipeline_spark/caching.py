@@ -34,7 +34,7 @@ def scoped_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFram
     return df
 
 
-def release_cached(blocking: bool = False) -> int:
+def release_cached(*, blocking: bool = False) -> int:
     """Unpersist every tracked DataFrame; returns how many were released."""
     n = len(_LIVE)
     while _LIVE:

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from procurement_data_pipeline_spark.caching import release_cached, scoped_persist
+from procurement_data_pipeline_spark.caching import scoped_persist
 from procurement_data_pipeline_spark.llm_ops.text import words
 
 #: End-of-word marker (kept out of the raw char alphabet by construction).
@@ -135,9 +135,9 @@ def bpe_train(
             cur.select("freq", merge_pair_expr(F.col("toks"), a, b).alias("toks"))
         )
         nxt.count()  # materialize before dropping the previous round
-        release_cached(cur)
+        cur.unpersist()
         cur = nxt
-    release_cached(cur)
+    cur.unpersist()
     return merges
 
 

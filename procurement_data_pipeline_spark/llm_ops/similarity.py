@@ -285,30 +285,6 @@ def _signatures_pandas_udf(per_table: list[list[list[float]]]):
     return sigs
 
 
-def lsh_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit i = sign(dot(plane_i, v))."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec_col,
-                    F.array(*[F.lit(p) for p in plane]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            > 0,
-            F.lit(1 << i).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for i, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """Row-wise dot(A[i], B[i]) with the JVM fold's EXACT IEEE order.
 

@@ -8,7 +8,7 @@ prunes at the source.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -60,7 +60,3 @@ def demand_window(
         aggs.append(F.countDistinct("order_id").cast("int").alias("order_count"))
     return df.groupBy("product_id").agg(*aggs)
 
-
-def zero_if_null(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(0))

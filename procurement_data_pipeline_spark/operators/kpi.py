@@ -1,11 +1,12 @@
 """Dashboard KPI queries (reference parity: metabase_setup_dag.py:237-313).
 
-Five latest-partition KPI shapes over the derived tables: total demand scalar,
-demand by product, demand by supplier, order-status breakdown, total
-estimated cost. The latest-partition selection is the reference's scalar
-subquery ``WHERE d = (SELECT MAX(d) …)`` — expressed the same way here via a
-join against the 1-row max-date aggregate (Catalyst executes it as a
-broadcast semi-join; no driver round-trip)."""
+Latest-partition KPI shapes over the derived tables: total demand scalar,
+demand by supplier, order-status breakdown, total estimated cost, and
+demand by product and supplier together (``demand_breakdown``). The
+latest-partition selection is the reference's scalar subquery
+``WHERE d = (SELECT MAX(d) …)`` — expressed the same way here via a join
+against the 1-row max-date aggregate (Catalyst executes it as a broadcast
+semi-join; no driver round-trip)."""
 
 from __future__ import annotations
 
@@ -24,16 +25,6 @@ def total_net_demand(net_demand: DataFrame) -> DataFrame:
     """KPI 1 — scalar total demand on the latest calculation_date."""
     return _latest(net_demand, "calculation_date").agg(
         F.sum("net_demand").cast("bigint").alias("total_net_demand")
-    )
-
-
-def demand_by_product(net_demand: DataFrame) -> DataFrame:
-    """KPI 2 — per-product demand, highest first."""
-    return (
-        _latest(net_demand, "calculation_date")
-        .groupBy("product_name")
-        .agg(F.sum("net_demand").cast("bigint").alias("net_demand"))
-        .orderBy(F.col("net_demand").desc(), F.col("product_name").asc())
     )
 
 

@@ -1,4 +1,4 @@
-"""Scan-side parallelism for compute-heavy stages (optimization guide §2.5).
+"""Input sizing from the frame's own file listing (optimization guide §2.5, §3.1).
 
 A parquet source that yields fewer splits than the session has cores leaves
 every pre-shuffle operator single-task: the scan, any per-row expression
@@ -6,15 +6,27 @@ work (hashes, explodes, higher-order lambdas), and the map side of the
 first aggregation all run on ONE core while the rest of the machine idles.
 That is precisely the guide's "input skew: one huge unsplittable file"
 case, and its prescribed fix is a repartition immediately after the read.
+A forced broadcast, likewise, is only safe when the broadcast side is
+provably small.
 
-The repartition must be SCALE-ADAPTIVE, not a constant tuned for local
-mode: on a 100 TB table the scan already yields thousands of splits and an
-unconditional repartition would add a full extra shuffle of the fact for
-nothing. :func:`widen_scan` therefore decides from the SOURCE FILE SIZES —
-the same quantity Spark's own split planner uses — and no-ops whenever the
-files already produce at least ``cores`` splits. Wherever the split
-estimate cannot be computed (non-local path), it also no-ops: the helper
-may only ever ADD parallelism it can prove is missing.
+Both decisions must hold at 100 TB, where a table is a directory of
+thousands of files (or a remote URI), not the single local file the
+fixtures ship. So every size here comes from the files the DataFrame
+itself reads — ``df.inputFiles()``, Spark's own listing, which covers
+single files, directories and partitioned layouts alike — sized on the
+local filesystem. Any non-``file:`` URI, any unreadable file, or a frame
+that scans no files yields "unknown", and unknown always means "do
+nothing": the widen may only ADD parallelism it can prove is missing, and
+the broadcast guard may only allow a broadcast it can prove is small.
+
+Two tempting shortcuts give wrong answers and are deliberately not used:
+
+* Spark's PLANNED partition count: a single one-row-group parquet file
+  larger than the per-core split size plans several partitions, but
+  parquet splits at row-group boundaries, so only one of them gets data.
+* ``optimizedPlan().stats().sizeInBytes``: on a projected frame Catalyst
+  scales the file size down by the pruned columns, so it under-reports
+  the bytes the scan actually reads.
 
 Round-robin repartition is retry-safe here because Spark sorts before
 repartitioning by default (``spark.sql.execution.sortBeforeRepartition``,
@@ -26,73 +38,63 @@ from __future__ import annotations
 
 import math
 import os
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-_MPB_CONF = "spark.sql.files.maxPartitionBytes"
-_DEFAULT_MPB = 128 * 1024 * 1024
-
-
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a size conf that may carry a unit suffix ("128m", "…b")."""
-    try:
-        raw = str(spark.conf.get(key, str(default))).strip().lower()
-    except Exception:  # noqa: BLE001 — conf lookup is best-effort
-        return default
-    if raw.endswith("b"):
-        raw = raw[:-1]
-    mult = 1
-    if raw and raw[-1] in "kmg":
-        mult = {"k": 1024, "m": 1024**2, "g": 1024**3}[raw[-1]]
-        raw = raw[:-1]
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
+# 256 MB of parquet-compressed dimension rows (~100 B/row) ≈ a few million
+# rows — a (long, int)-shaped hash relation well inside executor broadcast
+# budgets.
+_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 
-def estimated_scan_splits(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...]
-) -> int | None:
-    """Estimated number of scan splits the named source files produce,
-    or None when the files cannot be sized locally."""
-    mpb = _conf_bytes(spark, _MPB_CONF, _DEFAULT_MPB)
-    total = 0
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
+def _input_file_sizes(df: DataFrame) -> list[int] | None:
+    """On-disk bytes of every file ``df`` scans, or None when they cannot
+    be proven: a non-``file:`` URI, an unreadable file, or no files."""
+    sizes = []
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme != "file":
+            return None
         try:
-            size = os.path.getsize(path)
+            sizes.append(os.path.getsize(unquote(parsed.path)))
         except OSError:
             return None
-        total += max(1, math.ceil(size / mpb))
-    return total
+    return sizes or None
 
 
-def widen_scan(
-    df: DataFrame,
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...],
-    *key_cols: str,
-) -> DataFrame:
+def fits_broadcast(df: DataFrame, max_bytes: int = _BROADCAST_MAX_BYTES) -> bool:
+    """True iff the files ``df`` scans provably sum to at most ``max_bytes``.
+
+    Gate a forced broadcast of a relation that grows with scale factor on
+    the source that bounds its cardinality (e.g. a part-grain relation on
+    the part table); past the budget, or when the size is unknown, fall
+    back to the plain join, which is correct at any scale.
+    """
+    sizes = _input_file_sizes(df)
+    return sizes is not None and sum(sizes) <= max_bytes
+
+
+def widen_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition ``df`` to the session's core count IFF its source files
     are too small to split (single-task scan) — the guide-§2.5 fix for
     compute-heavy stages over unsplittable inputs, guarded so it is a
     NO-OP at any scale where the scan is already parallel.
 
+    Splits are estimated as the sum over files of
+    ``ceil(size / spark.sql.files.maxPartitionBytes)``.
+
     ``key_cols``: optional deterministic hash keys (skips the round-robin
     path's local sort); must be well-spread (many more distinct values
     than partitions — guide §2.5 on synthetic keys).
     """
-    # A/B kill-switch for cold-JVM measurement (VERDICT r11 item 1): the
-    # widen only fires on single-split local fixtures, so the toggle can
-    # never change a cluster-scale plan — it exists to let one binary
-    # measure widened vs un-widened under identical conditions.
-    if os.environ.get("SPARK_GRAFT_WIDEN", "1") == "0":
+    sizes = _input_file_sizes(df)
+    if sizes is None:
         return df
+    spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    splits = estimated_scan_splits(spark, sf_dir, tables)
-    if splits is None or splits >= cores:
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if sum(max(1, math.ceil(s / mpb)) for s in sizes) >= cores:
         return df
     if key_cols:
         return df.repartition(cores, *key_cols)

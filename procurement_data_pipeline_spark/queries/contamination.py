@@ -272,7 +272,7 @@ def q_docs_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id distribution: trigram shingling is heavy per-row text work on
     # a single-split source (guide §2.5), and the final per-doc coverage
     # groupBy rides the same clustering (§2.4).
-    docs = widen_scan(docs, spark, sf_dir, ("documents",), "doc_id")
+    docs = widen_scan(docs, "doc_id")
     occ = docs.select(
         "doc_id", F.explode(word_ngrams("text", 3)).alias("w")
     )

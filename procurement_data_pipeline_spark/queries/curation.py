@@ -108,7 +108,7 @@ def q_docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Widen the single-split scan (guide §2.5): both the corpus and eval
     # sides tokenize from the same repartition subtree (exchange reused),
     # parallelizing the 8-gram shingling.
-    docs = widen_scan(docs, spark, sf_dir, ("documents",), "doc_id")
+    docs = widen_scan(docs, "doc_id")
     return decontaminate(
         docs.filter(F.col("source") != "src0"),
         docs.filter(F.col("source") == "src0"),
@@ -303,17 +303,7 @@ def q_docs_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # widened scan: n-gram shingling + PPJoin prefix expansion is heavy
     # per-row text work that a single-split source serializes (guide §2.5)
-    from procurement_data_pipeline_spark.operators.parallelism import (
-        widen_scan,
-    )
-
-    docs = widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        sf_dir,
-        ("documents",),
-        "doc_id",
-    )
+    docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.8)
     clusters = dedup_clusters(docs, pairs)
     return cluster_safe_split(

@@ -233,10 +233,7 @@ def q_events_value_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 "event_id",
                 F.floor(F.col("value") * 1000000).cast("long").alias("vm"),
-            ),
-            spark,
-            sf_dir,
-            ("events",),
+            )
         )
     )
     # derandomized Poisson draw via EXACT hex-prefix thresholds

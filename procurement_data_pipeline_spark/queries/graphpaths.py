@@ -36,10 +36,13 @@ from pyspark.sql import functions as F
 from procurement_data_pipeline_spark.caching import scoped_persist
 from procurement_data_pipeline_spark.operators.parallelism import widen_scan
 from procurement_data_pipeline_spark.registry import register
-from procurement_data_pipeline_spark.sources.tables import load_table
+from procurement_data_pipeline_spark.sources.tables import (
+    load_table,
+    source_fits_broadcast,
+)
 
 
-def _copurchase_edges(spark, sf_dir, li):
+def _copurchase_edges(li):
     """Directed co-purchase edges via ONE basket pass (groupBy +
     collect_set + in-codegen pair expansion, both orientations emitted
     together) instead of the fact-table self-join: the same distinct edge
@@ -51,9 +54,6 @@ def _copurchase_edges(spark, sf_dir, li):
             li.select(
                 F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
             ),
-            spark,
-            sf_dir,
-            ("lineitem",),
             "o",
         )
         .groupBy("o")
@@ -75,28 +75,6 @@ def _copurchase_edges(spark, sf_dir, li):
     )
 
 _MAX_HOPS = 3
-
-# The BFS frontier is part-grain (⊆ the part catalog), but parts scale
-# with SF in TPC-H-shaped data, so the §3.1 broadcast needs the same
-# provable-input-size guard widen_scan uses (VERDICT r11 item 9): the
-# part source's on-disk bytes bound the frontier's cardinality. 256 MB of
-# parquet-compressed part rows (~100 B/row) ≈ a few million parts — a
-# (long, int) frontier hash relation well inside executor broadcast
-# budgets; past that (or where the size cannot be read) the hop joins
-# fall back to the plain shuffle join, correct at any scale.
-_FRONTIER_BCAST_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _frontier_fits_broadcast(sf_dir: str) -> bool:
-    import os
-
-    try:
-        return (
-            os.path.getsize(os.path.join(sf_dir, "part.parquet"))
-            <= _FRONTIER_BCAST_MAX_BYTES
-        )
-    except OSError:
-        return False
 
 
 @register(
@@ -128,9 +106,9 @@ FROM reach GROUP BY part
 )
 def q_part_copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    edges = scoped_persist(_copurchase_edges(spark, sf_dir, li))
+    edges = scoped_persist(_copurchase_edges(li))
     seed = (
-        widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey")
+        widen_scan(li, "l_partkey")
         .groupBy(F.col("l_partkey").alias("part"))
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
         .orderBy(F.desc("q"), "part")
@@ -138,7 +116,10 @@ def q_part_copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("part")
     )
     dist = seed.select("part", F.lit(0).alias("hops"))
-    bcast_ok = _frontier_fits_broadcast(sf_dir)
+    # The BFS frontier is part-grain (⊆ the part catalog), but parts scale
+    # with SF in TPC-H-shaped data: the part source's on-disk bytes bound
+    # the frontier's cardinality, so they gate the §3.1 broadcast.
+    bcast_ok = source_fits_broadcast(spark, sf_dir, "part")
     for h in range(1, _MAX_HOPS + 1):
         frontier = dist.filter(F.col("hops") == h - 1)
         # The frontier is PART-grain, so broadcasting it keeps the cached
@@ -207,7 +188,7 @@ def q_part_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-location); degrees are one part-grain count broadcast back onto
     the edges; the readout is one 1-row moment aggregate."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = scoped_persist(_copurchase_edges(spark, sf_dir, li))
+    edges = scoped_persist(_copurchase_edges(li))
     deg = edges.groupBy(F.col("pa").alias("part")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )

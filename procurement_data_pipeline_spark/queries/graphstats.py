@@ -44,7 +44,10 @@ from pyspark.sql import functions as F
 from procurement_data_pipeline_spark.caching import scoped_persist
 from procurement_data_pipeline_spark.operators.parallelism import widen_scan
 from procurement_data_pipeline_spark.registry import register
-from procurement_data_pipeline_spark.sources.tables import load_table
+from procurement_data_pipeline_spark.sources.tables import (
+    load_table,
+    source_fits_broadcast,
+)
 
 _TOP_TRIANGLE_PARTS = 25
 _ALSO_BOUGHT_K = 3
@@ -110,9 +113,6 @@ def q_part_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.select(
                 F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
             ),
-            spark,
-            sf_dir,
-            ("lineitem",),
             "o",
         )
         .groupBy("o")
@@ -222,12 +222,15 @@ def q_part_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.sum("n").cast("long").alias("triangles"))
     )
-    # tri_v is part-grain (dimension-scale) — broadcast it explicitly:
-    # with deg persisted, the static planner lost the estimate that made
-    # this LeftOuter a broadcast join and fell back to SMJ (AQE would fix
-    # it at runtime, but the committed plan audit should not rely on that)
+    # tri_v is part-grain (bounded by the part source) — broadcast it
+    # explicitly while that source fits the budget: with deg persisted, the
+    # static planner lost the estimate that made this LeftOuter a broadcast
+    # join and fell back to SMJ (AQE would fix it at runtime, but the
+    # committed plan audit should not rely on that)
+    if source_fits_broadcast(spark, sf_dir, "part"):
+        tri_v = F.broadcast(tri_v)
     return (
-        deg.join(F.broadcast(tri_v), deg["v"] == tri_v["v"], "left")
+        deg.join(tri_v, deg["v"] == tri_v["v"], "left")
         .select(
             deg["v"].alias("part"),
             "degree",
@@ -298,9 +301,6 @@ def q_part_also_bought_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.select(
                 F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
             ),
-            spark,
-            sf_dir,
-            ("lineitem",),
             "o",
         )
         .groupBy("o")

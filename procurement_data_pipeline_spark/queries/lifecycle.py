@@ -22,7 +22,10 @@ from pyspark.sql import functions as F
 from procurement_data_pipeline_spark.functions.money import cents, dollars, micros
 from procurement_data_pipeline_spark.operators.parallelism import widen_scan
 from procurement_data_pipeline_spark.registry import register
-from procurement_data_pipeline_spark.sources.tables import load_table
+from procurement_data_pipeline_spark.sources.tables import (
+    load_table,
+    source_fits_broadcast,
+)
 
 
 @register(
@@ -434,9 +437,6 @@ def q_part_affinity_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.select(
                 F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
             ),
-            spark,
-            sf_dir,
-            ("lineitem",),
             "o",
         )
         .groupBy("o")
@@ -471,11 +471,11 @@ def q_part_affinity_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ib = item.select(
         F.col("partkey").alias("part_b"), F.col("item_n").alias("item_b")
     )
-    enriched = (
-        pairs.join(F.broadcast(ia), "part_a")
-        .join(F.broadcast(ib), "part_b")
-        .crossJoin(F.broadcast(n))
-    )
+    # item counts are part-grain: the part source bounds them, so it gates
+    # their broadcast (plain joins past the budget)
+    if source_fits_broadcast(spark, sf_dir, "part"):
+        ia, ib = F.broadcast(ia), F.broadcast(ib)
+    enriched = pairs.join(ia, "part_a").join(ib, "part_b").crossJoin(F.broadcast(n))
     pn = F.col("pair_n").cast("double")
     return (
         enriched.select(

@@ -108,7 +108,7 @@ def _mrp_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     all five chain consumers).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey")
+    li = widen_scan(li, "l_partkey")
     qty = F.col("l_quantity").cast("int")
     odate = F.col("l_shipdate").cast("date")
     in_win = (odate >= F.lit(_FROM).cast("date")) & (

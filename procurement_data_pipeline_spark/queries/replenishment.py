@@ -65,7 +65,7 @@ def _daily_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here and the per-part aggregations/windows downstream all cluster by
     # partkey (guide §2.4 — one exchange for the whole family), and the
     # single-split scan's map side parallelizes (§2.5).
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey")
+    li = widen_scan(li, "l_partkey")
     return li.groupBy(
         F.col("l_partkey").alias("partkey"),
         F.col("l_shipdate").cast("date").alias("day"),
@@ -430,13 +430,7 @@ def q_part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (partkey, day, qty) _daily_demand computes — reproduced here with
     # the revenue column added rather than shared, because adding a column
     # to the shared helper would widen the five sibling queries' scans.
-    li = widen_scan(
-        load_table(spark, sf_dir, "lineitem"),
-        spark,
-        sf_dir,
-        ("lineitem",),
-        "l_partkey",
-    )
+    li = widen_scan(load_table(spark, sf_dir, "lineitem"), "l_partkey")
     base = scoped_persist(
         li.groupBy(
             F.col("l_partkey").alias("partkey"),
@@ -598,7 +592,7 @@ def q_part_lot_sizing_ww(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy, the per-part prefix window, and the per-part fold aggregate
     # all cluster by partkey (guide §2.4), so the O(T²) DP fold spreads
     # over every core instead of riding the single-split scan (§2.5).
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey")
+    li = widen_scan(li, "l_partkey")
     monthly = li.groupBy(
         F.col("l_partkey").alias("partkey"),
         (

@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from procurement_data_pipeline_spark.operators.parallelism import widen_scan
 from procurement_data_pipeline_spark.registry import register
 from procurement_data_pipeline_spark.sources.tables import load_table
 

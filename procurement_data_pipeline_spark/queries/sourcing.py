@@ -261,10 +261,7 @@ def q_brand_maverick_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l_partkey distribution: the (part, supplier) groupBy and the
     # per-part rank window both cluster by partkey (guide §2.4) — one
     # exchange, parallel map side (§2.5).
-    li = widen_scan(
-        load_table(spark, sf_dir, "lineitem"), spark, sf_dir, ("lineitem",),
-        "l_partkey",
-    ).select(
+    li = widen_scan(load_table(spark, sf_dir, "lineitem"), "l_partkey").select(
         "l_partkey", "l_suppkey", cents("l_extendedprice").alias("val_c")
     )
     ps = li.groupBy(
@@ -358,7 +355,7 @@ def q_part_kraljic_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l_partkey distribution: both phases of the part-grain groupBy
     # (countDistinct expand included) cluster by partkey (guide §2.4), and
     # the single-split scan's map side parallelizes (§2.5).
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey").select(
+    li = widen_scan(li, "l_partkey").select(
         "l_partkey", "l_suppkey", cents("l_extendedprice").alias("val_c")
     )
     from procurement_data_pipeline_spark.caching import scoped_persist
@@ -495,10 +492,7 @@ def q_supplier_disruption_premium(spark: SparkSession, sf_dir: str) -> DataFrame
     # Same l_partkey distribution as maverick_spend: (part, supplier)
     # groupBy + per-part windows + per-part rollup all ride one exchange
     # (guide §2.4), with a parallel map side (§2.5).
-    li = widen_scan(
-        load_table(spark, sf_dir, "lineitem"), spark, sf_dir, ("lineitem",),
-        "l_partkey",
-    ).select(
+    li = widen_scan(load_table(spark, sf_dir, "lineitem"), "l_partkey").select(
         "l_partkey",
         "l_suppkey",
         cents("l_extendedprice").alias("val_c"),

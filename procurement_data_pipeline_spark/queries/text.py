@@ -508,7 +508,7 @@ def q_docs_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Widen the single-split scan (guide §2.5): tokenization parallelizes
     # and the (doc_id, word) tf groupBy plus the per-doc top-5 window ride
     # the doc_id clustering (§2.4).
-    docs = widen_scan(docs, spark, sf_dir, ("documents",), "doc_id")
+    docs = widen_scan(docs, "doc_id")
     # tf feeds BOTH the df aggregation and the final scoring join; without a
     # persist Catalyst re-derives the explode+groupBy per consumer (the plan
     # audit showed 3 scans) — at scale that doubles the heaviest stage.

@@ -481,7 +481,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition subtree, Spark reuses the exchange — lineitem is scanned
     # and shuffled ONCE instead of twice. Single-split scans also gain full
     # map-side parallelism (§2.5); no-op at scale via the widen_scan guard.
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_orderkey")
+    li = widen_scan(li, "l_orderkey")
     big = (
         li.groupBy(F.col("l_orderkey").alias("b_orderkey"))
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("_sq"))

@@ -536,7 +536,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scan by l_orderkey parallelizes its map side (guide §2.5) and
     # satisfies the groupBy's clustering so the aggregate exchange
     # disappears (§2.4). No-op at scale via the widen_scan guard.
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_orderkey")
+    li = widen_scan(li, "l_orderkey")
     per_order = (
         li.join(
             orders.filter(F.col("o_orderstatus") == "F").select(

@@ -92,9 +92,6 @@ def q_orders_prorated_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("l_shipdate").cast("date").alias("sdate"),
             cents("l_extendedprice").alias("val_cents"),
         ),
-        spark,
-        sf_dir,
-        ("lineitem",),
         "l_orderkey",
     )
     o = load_table(spark, sf_dir, "orders").select(
@@ -198,7 +195,7 @@ def q_orders_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition (guide §2.5). A shuffled join keyed on priority would cap
     # parallelism at the priority count instead.
     daily = scoped_persist(
-        widen_scan(daily, spark, sf_dir, ("orders",))
+        widen_scan(daily)
     )  # feeds pairs (twice) and n_days
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(

@@ -80,7 +80,7 @@ def product_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (§2.5) and no-ops at scale, where the plan keeps its groupBy+window
     # exchanges as before. Measured sf0.1: 0.87 s -> 0.49 s, 2 -> 1
     # exchanges.
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey")
+    li = widen_scan(li, "l_partkey")
     pairs = li.groupBy(
         F.col("l_partkey").alias("product_id"),
         F.col("l_suppkey").alias("supplier_id"),
@@ -126,7 +126,7 @@ def inventory(spark: SparkSession, sf_dir: str, cutoff: str = INV_CUTOFF) -> Dat
     # the branch's 2 exchanges to this one while parallelizing the
     # single-split scan (§2.5). The shipdate filter pushes below the
     # repartition, so only the pre-cutoff rows shuffle.
-    li = widen_scan(li, spark, sf_dir, ("lineitem",), "l_partkey")
+    li = widen_scan(li, "l_partkey")
     return (
         li.filter(F.col("l_shipdate") < F.lit(cutoff).cast("timestamp"))
         .groupBy(

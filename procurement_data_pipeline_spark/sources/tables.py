@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from procurement_data_pipeline_spark.operators.parallelism import fits_broadcast
 from procurement_data_pipeline_spark.session import configure_runtime
 
 TABLES = (
@@ -130,3 +132,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     return tuple(load_table(spark, sf_dir, n) for n in names)
+
+
+def source_fits_broadcast(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """:func:`fits_broadcast` over table ``name`` — the gate for a forced
+    broadcast of a relation that table bounds. An absent or unreadable
+    table proves nothing, so the caller falls back to the plain join."""
+    try:
+        return fits_broadcast(load_table(spark, sf_dir, name))
+    except AnalysisException:
+        return False

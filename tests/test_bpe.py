@@ -117,3 +117,19 @@ def test_bpe_train_on_documents_table(spark):
         F.sum(F.size(bpe_segment("w", merges)) * F.col("freq"))
     ).collect()[0][0]
     assert after < base
+
+
+def test_bpe_vocab_releases_round_caches(spark):
+    """Each merge round frees the previous round's persisted segmentation,
+    and the harness's release frees the rest: after docs_bpe_vocab builds,
+    no block it persisted stays pinned."""
+    from procurement_data_pipeline_spark.caching import release_cached
+    from procurement_data_pipeline_spark.registry import load_all
+
+    release_cached(blocking=True)
+    jsc = spark.sparkContext._jsc.sc()
+    baseline = jsc.getPersistentRDDs().size()
+    load_all()["docs_bpe_vocab"].builder(spark, SF_DIR).collect()
+    release_cached(blocking=True)
+    # <=, not ==: the context cleaner may free older, unrelated blocks
+    assert jsc.getPersistentRDDs().size() <= baseline

@@ -64,17 +64,3 @@ def test_bfs_hop_consistency(spark, sf_dir):
             continue
         assert any(got.get(p) == h - 1 for p in preds.get(part, ())), (part, h)
 
-
-def test_frontier_broadcast_guard(monkeypatch, sf_dir):
-    """The BFS frontier broadcast must be gated on the provable part-
-    dimension size bound: tiny fixtures broadcast (plan unchanged), a
-    part source past the budget — or one whose size cannot be read —
-    falls back to the shuffle join."""
-    import os
-
-    from procurement_data_pipeline_spark.queries import graphpaths as gp
-
-    assert gp._frontier_fits_broadcast(sf_dir)
-    monkeypatch.setattr(os.path, "getsize", lambda p: 10**10)
-    assert not gp._frontier_fits_broadcast(sf_dir)
-    assert not gp._frontier_fits_broadcast("/nonexistent-dir")

@@ -115,7 +115,10 @@ def plan_stats(df) -> dict:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_session("plan-audit")
-    print(f"# Plan audit @ {sf_dir}\n")
+    # widen decisions depend on the core count, so audits from different
+    # machines are only comparable at the same defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
+    print(f"# Plan audit @ {sf_dir} · defaultParallelism={cores}\n")
     print(
         "| query | scans | pushdown | shuffles | 1psort | bhj | smj | bnlj | cartesian |"
     )
