@@ -14,12 +14,36 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 RAW_ORDERS = "raw/orders"
 RAW_STOCK = "raw/stock"
 PROCESSED = "processed"
 OUTPUT_SUPPLIER_ORDERS = "output/supplier_orders"
 LOGS_EXCEPTIONS = "logs/exceptions"
+
+# The raw-zone contracts, partition column last. Writes cast to them and
+# reads declare them, so no read runs a schema-inference job and the
+# catalog DDL (register_tables) comes from the same definition.
+ORDERS_SCHEMA = T.StructType(
+    [
+        T.StructField("order_id", T.LongType()),
+        T.StructField("product_id", T.IntegerType()),
+        T.StructField("quantity", T.IntegerType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("order_date", T.DateType()),
+    ]
+)
+STOCK_SCHEMA = T.StructType(
+    [
+        T.StructField("product_id", T.IntegerType()),
+        T.StructField("available_qty", T.IntegerType()),
+        T.StructField("reserved_qty", T.IntegerType()),
+        T.StructField("safety_stock", T.IntegerType()),
+        T.StructField("warehouse_id", T.IntegerType()),
+        T.StructField("snapshot_date", T.DateType()),
+    ]
+)
 
 
 class Warehouse:
@@ -58,32 +82,39 @@ class Warehouse:
         """Partitioned parquet write: one call replaces the reference's
         generate-CSV → pyarrow → WebHDFS upload chain
         (hdfs_upload_data_dag.py:122-221)."""
-        if stage_csv:
-            orders.write.mode("overwrite").option("header", True).csv(
-                self.path("staging", "orders")
-            )
-        self._write_partitioned(orders, "order_date", self.path(RAW_ORDERS))
+        self._write_raw(orders, ORDERS_SCHEMA, "orders", RAW_ORDERS, stage_csv)
 
     def write_inventory(self, inventory: DataFrame, stage_csv: bool = False) -> None:
+        self._write_raw(inventory, STOCK_SCHEMA, "stock", RAW_STOCK, stage_csv)
+
+    def _write_raw(
+        self, df: DataFrame, schema: T.StructType, stage: str, zone: str, stage_csv: bool
+    ) -> None:
+        df = df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema])
         if stage_csv:
-            inventory.write.mode("overwrite").option("header", True).csv(
-                self.path("staging", "stock")
+            df.write.mode("overwrite").option("header", True).csv(
+                self.path("staging", stage)
             )
-        self._write_partitioned(inventory, "snapshot_date", self.path(RAW_STOCK))
+        self._write_partitioned(df, schema.fields[-1].name, self.path(zone))
 
     def read_orders(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path(RAW_ORDERS))
+        return spark.read.schema(ORDERS_SCHEMA).parquet(self.path(RAW_ORDERS))
 
     def read_inventory(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path(RAW_STOCK))
+        return spark.read.schema(STOCK_SCHEMA).parquet(self.path(RAW_STOCK))
 
     def write_derived(self, df: DataFrame, table: str, partition_col: str) -> None:
         """Materialize a derived table (INSERT INTO … SELECT parity, S5),
         idempotently per partition (see _write_partitioned)."""
         self._write_partitioned(df, partition_col, self.path(PROCESSED, table))
 
-    def read_derived(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(PROCESSED, table))
+    def read_derived(
+        self, spark: SparkSession, table: str, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """Read a derived table; a known ``schema`` (the frame that wrote
+        it) skips the schema-inference job."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(PROCESSED, table))
 
 
 def register_tables(spark: SparkSession, wh: Warehouse, db: str = "procurement") -> None:
@@ -94,26 +125,15 @@ def register_tables(spark: SparkSession, wh: Warehouse, db: str = "procurement")
     ``MSCK REPAIR TABLE`` (trino_init_tables_dag.py:33-96,
     utils/trino_client.py:130-151)."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    for table, path, part_col, schema in (
-        (
-            "orders",
-            wh.path(RAW_ORDERS),
-            "order_date",
-            "order_id BIGINT, product_id INT, quantity INT, status STRING",
-        ),
-        (
-            "inventory",
-            wh.path(RAW_STOCK),
-            "snapshot_date",
-            "product_id INT, available_qty INT, reserved_qty INT,"
-            " safety_stock INT, warehouse_id INT",
-        ),
+    for table, path, schema in (
+        ("orders", wh.path(RAW_ORDERS), ORDERS_SCHEMA),
+        ("inventory", wh.path(RAW_STOCK), STOCK_SCHEMA),
     ):
+        columns = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
         spark.sql(f"DROP TABLE IF EXISTS {db}.{table}")
         spark.sql(
-            f"CREATE TABLE {db}.{table} ({schema}, {part_col} DATE)"
-            f" USING PARQUET PARTITIONED BY ({part_col})"
-            f" LOCATION '{path}'"
+            f"CREATE TABLE {db}.{table} ({columns}) USING PARQUET"
+            f" PARTITIONED BY ({schema.fields[-1].name}) LOCATION '{path}'"
         )
         spark.sql(f"MSCK REPAIR TABLE {db}.{table}")
 

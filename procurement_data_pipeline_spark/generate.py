@@ -8,6 +8,14 @@ is replaced per SURVEY.md §7.3 so golden tests are stable) and happens
 driver-side only for the tiny dims; order generation is distributed via
 ``spark.range`` + column expressions so a 1000× day would still generate
 in parallel.
+
+The master data is built as JVM-local relations (:func:`_local_relation`),
+not with ``spark.createDataFrame(list)``. On classic Spark that call plans
+a PythonRDD scan (``Scan ExistingRDD``): every stage reading it starts
+Python workers, and its size is unknown (``Long.MaxValue``), so no join
+against it is ever broadcast at plan time and AQE must first run extra
+shuffle stages to measure it. A literal relation is a ``LocalTableScan``
+of known size, so joins broadcast it at plan time.
 """
 
 from __future__ import annotations
@@ -88,46 +96,63 @@ PRODUCT_SUPPLIERS_SEED = [
 ]
 
 
+PRODUCTS_SCHEMA = T.StructType(
+    [
+        T.StructField("product_id", T.IntegerType(), False),
+        T.StructField("product_name", T.StringType()),
+        T.StructField("product_code", T.StringType()),
+        T.StructField("category", T.StringType()),
+        T.StructField("unit_price", T.DecimalType(10, 2)),
+        T.StructField("safety_stock_level", T.IntegerType()),
+        T.StructField("min_order_quantity", T.IntegerType()),
+        T.StructField("is_active", T.BooleanType()),
+    ]
+)
+
+SUPPLIERS_SCHEMA = T.StructType(
+    [
+        T.StructField("supplier_id", T.IntegerType(), False),
+        T.StructField("supplier_name", T.StringType()),
+        T.StructField("supplier_code", T.StringType()),
+        T.StructField("lead_time_days", T.IntegerType()),
+        T.StructField("reliability_score", T.DecimalType(3, 2)),
+        T.StructField("is_active", T.BooleanType()),
+    ]
+)
+
+PRODUCT_SUPPLIERS_SCHEMA = T.StructType(
+    [
+        T.StructField("product_id", T.IntegerType(), False),
+        T.StructField("supplier_id", T.IntegerType(), False),
+        T.StructField("unit_cost", T.DecimalType(10, 2)),
+        T.StructField("priority", T.IntegerType()),
+        T.StructField("is_preferred", T.BooleanType()),
+    ]
+)
+
+
+def _local_relation(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """Python rows as a JVM-local relation (``LocalTableScan``) with
+    exactly ``schema``, nullability included.
+
+    Every value becomes a typed literal, so the plan carries the rows
+    itself: no Python worker, a plan-time size, and the same plan whatever
+    the Arrow setting.
+    """
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType) for v, f in zip(row, schema)])
+        for row in rows
+    ]
+    table = F.array(*structs).cast(T.ArrayType(schema, containsNull=False))
+    return spark.sql("VALUES (1)").select(F.inline(table))
+
+
 def master_data(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The 5/3/10 master-data seed (ddl_postgres.sql:51-82)."""
-    products = spark.createDataFrame(
-        PRODUCTS_SEED,
-        T.StructType(
-            [
-                T.StructField("product_id", T.IntegerType(), False),
-                T.StructField("product_name", T.StringType()),
-                T.StructField("product_code", T.StringType()),
-                T.StructField("category", T.StringType()),
-                T.StructField("unit_price", T.DecimalType(10, 2)),
-                T.StructField("safety_stock_level", T.IntegerType()),
-                T.StructField("min_order_quantity", T.IntegerType()),
-                T.StructField("is_active", T.BooleanType()),
-            ]
-        ),
+    return (
+        _local_relation(spark, PRODUCTS_SEED, PRODUCTS_SCHEMA),
+        _local_relation(spark, SUPPLIERS_SEED, SUPPLIERS_SCHEMA),
+        _local_relation(spark, PRODUCT_SUPPLIERS_SEED, PRODUCT_SUPPLIERS_SCHEMA),
     )
-    suppliers = spark.createDataFrame(
-        SUPPLIERS_SEED,
-        T.StructType(
-            [
-                T.StructField("supplier_id", T.IntegerType(), False),
-                T.StructField("supplier_name", T.StringType()),
-                T.StructField("supplier_code", T.StringType()),
-                T.StructField("lead_time_days", T.IntegerType()),
-                T.StructField("reliability_score", T.DecimalType(3, 2)),
-                T.StructField("is_active", T.BooleanType()),
-            ]
-        ),
-    )
-    product_suppliers = spark.createDataFrame(
-        PRODUCT_SUPPLIERS_SEED,
-        T.StructType(
-            [
-                T.StructField("product_id", T.IntegerType(), False),
-                T.StructField("supplier_id", T.IntegerType(), False),
-                T.StructField("unit_cost", T.DecimalType(10, 2)),
-                T.StructField("priority", T.IntegerType()),
-                T.StructField("is_preferred", T.BooleanType()),
-            ]
-        ),
-    )
-    return products, suppliers, product_suppliers

@@ -70,8 +70,12 @@ def build_daily_pipeline(
     def aggregate(ctx: dict[str, Any]):
         agg = aggregate_orders(ctx["orders_raw"], exec_date, next_day)
         wh.write_derived(agg, "aggregated_orders", "order_date")
-        # verification echo (procurement_dag.py:47-56)
-        check = agg.agg(
+        # verification echo (procurement_dag.py:47-56): what landed in the
+        # day's partition, not a re-run of the aggregation
+        landed = wh.read_derived(spark, "aggregated_orders", agg.schema).filter(
+            F.col("order_date") == F.lit(exec_date).cast("date")
+        )
+        check = landed.agg(
             F.count(F.lit(1)).alias("n"), F.sum("total_quantity").alias("qty")
         ).collect()[0]
         return {"rows": check["n"], "total_quantity": check["qty"]}
@@ -92,10 +96,11 @@ def build_daily_pipeline(
         )
         # final ORDER BY supplier_id, supplier_priority, net_demand DESC
         # (net_demand.sql:87) — applied once, at the materialization boundary
-        wh.write_derived(present_net_demand(nd), "net_demand", "calculation_date")
-        ctx["net_demand_df"] = wh.read_derived(spark, "net_demand").filter(
-            F.col("calculation_date") == F.lit(exec_date).cast("date")
-        )
+        written = present_net_demand(nd)
+        wh.write_derived(written, "net_demand", "calculation_date")
+        ctx["net_demand_df"] = wh.read_derived(
+            spark, "net_demand", written.schema
+        ).filter(F.col("calculation_date") == F.lit(exec_date).cast("date"))
         return True
 
     @pipe.task("export_supplier_json", deps=("calculate_net_demand",))
