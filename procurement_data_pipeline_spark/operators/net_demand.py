@@ -13,7 +13,7 @@ Spark-first notes:
   end-to-end (predicate pushdown through the joins, partial aggregation
   before the shuffles).
 * The supplier dimension is broadcast (tiny by the reference data model); the
-  products⋈demand⋈inventory⋈ranked joins all share the ``product_id`` key, so
+  ranked⋈demand⋈inventory⋈products joins all share the ``product_id`` key, so
   one shuffle partitioning is reused across the join chain instead of
   re-shuffling per join.
 * Window rank=1 benefits from Catalyst's InferWindowGroupLimit — the filter
@@ -84,26 +84,31 @@ def net_demand(
     # one-shuffle demand branch is guaranteed by the logical plan itself,
     # not by the optimizer's pruning (see demand_window docstring).
     daily = demand_window(orders, date_from, date_to, include_order_count=False)
-    inv = rollup_inventory(inventory)
-    ranked = preferred_suppliers(product_suppliers)
-    return net_demand_from_parts(daily, inv, products, suppliers, ranked, calc_date)
+    parts = (
+        preferred_suppliers(product_suppliers)
+        .join(daily, "product_id", "left")
+        .join(rollup_inventory(inventory), "product_id", "left")
+    )
+    return net_demand_from_parts(parts, products, suppliers, calc_date)
 
 
 def net_demand_from_parts(
-    daily: DataFrame,
-    inv: DataFrame,
+    parts: DataFrame,
     products: DataFrame,
     suppliers: DataFrame,
-    ranked: DataFrame,
     calc_date: str,
 ) -> DataFrame:
-    """Final MRP join/clamp/projection (net_demand.sql:40-87) over
-    pre-built branch relations: ``daily`` (product_id, total_demand),
-    ``inv`` (product_id, available_qty, reserved_qty, safety_stock),
-    ``ranked`` (the rank-1 preferred-supplier rows). :func:`net_demand`
-    builds the branches from the raw views; the fused scan-once path
-    (queries/parity.py) derives all three from ONE (product, supplier)
-    conditional aggregation of the fact and shares this projection."""
+    """Final MRP join/clamp/projection (net_demand.sql:40-87) over ONE
+    per-product relation ``parts``: product_id, the preferred supplier's
+    supplier_id / unit_cost / priority, and total_demand, available_qty,
+    reserved_qty, safety_stock (NULL where the product has no demand or no
+    inventory; the COALESCEs of :func:`mrp_net_demand` absorb them).
+
+    ``products ⟕ daily ⟕ inv ⋈ ranked`` equals ``products ⋈ (ranked ⟕ daily
+    ⟕ inv)`` because every join is on ``product_id``, so :func:`net_demand`
+    builds ``parts`` that way from its three branches, and the headline
+    path (queries/parity.py) computes it as one product-grain aggregate of
+    the fact; both share this projection."""
     net = mrp_net_demand(
         F.col("total_demand"),
         F.col("safety_stock"),
@@ -114,9 +119,7 @@ def net_demand_from_parts(
 
     return (
         products.filter(F.col("is_active"))
-        .join(daily, "product_id", "left")
-        .join(inv, "product_id", "left")
-        .join(ranked, "product_id", "inner")
+        .join(parts, "product_id", "inner")
         .join(
             F.broadcast(suppliers.filter(F.col("is_active"))), "supplier_id", "inner"
         )

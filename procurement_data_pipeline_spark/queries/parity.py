@@ -11,13 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from procurement_data_pipeline_spark.functions.money import cents, dollars
 from procurement_data_pipeline_spark.operators import kpi as kpi_ops
 from procurement_data_pipeline_spark.operators.aggregate import aggregate_orders
 from procurement_data_pipeline_spark.operators.export import supplier_orders
 from procurement_data_pipeline_spark.operators.net_demand import (
+    net_demand_from_parts,
     preferred_suppliers,
 )
-from procurement_data_pipeline_spark.operators.parallelism import widen_scan
 from procurement_data_pipeline_spark.operators.quality import exceptions_report
 from procurement_data_pipeline_spark.registry import register
 from procurement_data_pipeline_spark.sources import procurement_views as pv
@@ -81,95 +82,68 @@ net_demand AS (
 """.strip()
 
 
-def _mrp_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE lineitem pass feeding every fact branch of the MRP chain
-    (optimization guide §6.2 scan-once / §2.3 aggregate-before-shuffle).
+def _net_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MRP chain as ONE product-grain aggregate of lineitem: the same
+    relation as ``net_demand(orders, inventory, …)`` over the derived views,
+    from one scan and one exchange (optimization guide §6.2 scan-once /
+    §2.3 aggregate-before-shuffle).
 
-    The chain's three derived-view branches all aggregate the SAME fact at
-    grains that factor through (product, supplier):
+    Every branch of the chain aggregates the same fact at a grain that
+    factors through (product, supplier), so each collapses to product grain:
 
-    * window demand   — SUM(quantity) over the demand window, per product;
-    * inventory       — SUM/COUNT/MAX over pre-cutoff rows, per (product,
-      warehouse), then rolled up per product (warehouse = f(supplier), so
-      the (product, supplier) grain is strictly finer, and SUM/COUNT/MAX
-      are associative through the regroup);
-    * product_suppliers — MIN(price/qty) per (product, supplier) exactly.
+    * window demand and inventory are SUM / COUNT / MAX over conditional
+      rows, which are associative through the views' (product, warehouse)
+      regroup;
+    * the preferred supplier is the rank-1 row of ``product_suppliers``,
+      ordered by (priority, unit_cost, supplier_id) with priority itself
+      ROW_NUMBER over (cost cents, supplier_id) — so it is the
+      lexicographic MIN of struct(cents, supplier_id), and its priority is
+      1. ``floor(100·x)`` is monotone, so the min of the per-row floors is
+      the view's floor of the min.
 
-    So one conditional aggregation at (product, supplier) grain replaces
-    THREE full scans + three fact exchanges with ONE scan + ONE exchange;
-    the result is dimension-pair-sized (the same cardinality class as the
-    product_suppliers view itself) and is persisted so each consumer
-    branch reads the aggregate, not the fact. Null semantics carry the
-    branch existence information: a product with no window rows yields
-    NULL _win_qty (≡ the old LEFT-JOIN miss under mrp_net_demand's
-    COALESCEs), one with no pre-cutoff rows yields NULL safety_stock
-    (≡ the fallback path) and 0/NULL available/reserved — the COALESCEs
-    make both shapes produce byte-identical outputs (oracle-verified for
-    all five chain consumers).
+    All of it is partial-aggregated map-side, so only one row per
+    (partition, product) shuffles. Null semantics carry the branch
+    existence information: a product with no window rows gets NULL
+    total_demand (as a LEFT-JOIN miss does), one with no pre-cutoff rows gets
+    NULL safety_stock (the safety_stock_level fallback) and NULL/0
+    available/reserved, which the COALESCEs of ``mrp_net_demand`` treat
+    exactly like the miss (oracle-checked for all five chain consumers).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    li = widen_scan(li, "l_partkey")
     qty = F.col("l_quantity").cast("int")
     odate = F.col("l_shipdate").cast("date")
     in_win = (odate >= F.lit(_FROM).cast("date")) & (
         odate < F.lit(_TO).cast("date")
     )
     pre = F.col("l_shipdate") < F.lit(_CUT).cast("timestamp")
-    return li.groupBy(
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_suppkey").alias("supplier_id"),
-    ).agg(
-        F.sum(F.when(in_win, qty)).alias("_win_qty"),
-        F.sum(F.when(pre, qty)).alias("_pre_qty"),
-        F.count(F.when(pre, F.lit(1))).alias("_pre_cnt"),
-        F.max(F.when(pre, qty)).alias("_pre_max"),
-        F.floor(F.min(F.col("l_extendedprice") / F.col("l_quantity")) * 100)
-        .cast("long")
-        .alias("unit_cost_cents"),
+    unit_cents = cents(F.col("l_extendedprice") / F.col("l_quantity"))
+    best = F.min(F.struct(unit_cents.alias("cents"), F.col("l_suppkey").alias("sid")))
+    parts = (
+        li.groupBy(F.col("l_partkey").alias("product_id"))
+        .agg(
+            best.alias("_best"),
+            F.sum(F.when(in_win, qty)).cast("int").alias("total_demand"),
+            F.sum(F.when(pre, qty)).cast("int").alias("available_qty"),
+            (F.count(F.when(pre, F.lit(1))) * F.lit(5)).cast("int").alias(
+                "reserved_qty"
+            ),
+            (F.max(F.when(pre, qty)) + F.lit(20)).cast("int").alias(
+                "safety_stock"
+            ),
+        )
+        .select(
+            "product_id",
+            F.col("_best.sid").alias("supplier_id"),
+            dollars(F.col("_best.cents")).alias("unit_cost"),
+            F.lit(1).cast("int").alias("priority"),
+            "total_demand",
+            "available_qty",
+            "reserved_qty",
+            "safety_stock",
+        )
     )
-
-
-def _net_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused scan-once MRP chain: identical relation to
-    ``net_demand(orders, inventory, …)`` over the derived views — the
-    branch expressions reproduce each view's arithmetic exactly (same
-    casts, same grains via associativity; see ``_mrp_pair_stats``) — but
-    the fact is scanned and exchanged ONCE instead of three times."""
-    from pyspark.sql.window import Window
-
-    from procurement_data_pipeline_spark.caching import scoped_persist
-    from procurement_data_pipeline_spark.operators.net_demand import (
-        net_demand_from_parts,
-    )
-
-    ps = scoped_persist(_mrp_pair_stats(spark, sf_dir))
-    daily = ps.groupBy("product_id").agg(
-        F.sum("_win_qty").cast("int").alias("total_demand")
-    )
-    inv = ps.groupBy("product_id").agg(
-        F.sum("_pre_qty").cast("int").alias("available_qty"),
-        (F.sum("_pre_cnt") * F.lit(5)).cast("int").alias("reserved_qty"),
-        (F.max("_pre_max") + F.lit(20)).cast("int").alias("safety_stock"),
-    )
-    wprio = Window.partitionBy("product_id").orderBy(
-        F.col("unit_cost_cents").asc(), F.col("supplier_id").asc()
-    )
-    prod_sup = ps.select(
-        "product_id",
-        "supplier_id",
-        (F.col("unit_cost_cents").cast("double") / F.lit(100.0)).alias(
-            "unit_cost"
-        ),
-        F.row_number().over(wprio).cast("int").alias("priority"),
-    )
-    ranked = preferred_suppliers(prod_sup)
     return net_demand_from_parts(
-        daily,
-        inv,
-        pv.products(spark, sf_dir),
-        pv.suppliers(spark, sf_dir),
-        ranked,
-        _CALC,
+        parts, pv.products(spark, sf_dir), pv.suppliers(spark, sf_dir), _CALC
     )
 
 

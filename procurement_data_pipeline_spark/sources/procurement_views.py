@@ -106,9 +106,9 @@ def orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (agg_orders_daily: widened 0.78/0.84/0.72 s vs un-widened
     # 0.79/0.74/0.68 s min-of-3, fresh JVM each, interleaved) — the map
     # side is one cheap projection, so the repartition replaced nothing.
-    # Reverted per the keep-only-cold-wins rule; the MRP chain no longer
-    # reads this view (it runs on the fused scan-once pair aggregation in
-    # queries/parity.py).
+    # Reverted per the keep-only-cold-wins rule; the headline MRP chain
+    # does not read this view (queries/parity.py computes it as one
+    # product-grain aggregate of lineitem).
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_orderkey").alias("order_id"),

@@ -2,17 +2,27 @@
 
 The benchmark corpus (TESTDATA.md) is one parquet file per table under an
 ``sf*`` directory. Reads go through ``spark.read.parquet`` so Catalyst gets
-native column pruning / filter pushdown; no schema is imposed on read (the
-files carry their own), but ``configure_runtime`` pins the session timezone
-first so timestamp→date casts are stable.
+native column pruning / filter pushdown, and ``configure_runtime`` pins the
+session timezone first so timestamp→date casts are stable.
+
+The schema is the file's own, inferred by Spark, and inference is a Spark
+job: a fixed cost on every read. So a local single file's inferred schema
+is kept per process, keyed on the file's identity (path, size, mtime) and
+the confs that shape inference, and later reads impose it
+(``spark.read.schema(s)``: no job). Directories, remote URIs, missing
+paths and nanos-encoded files (:func:`_read_nanos_tolerant`) always take
+the inferring read.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from procurement_data_pipeline_spark.operators.parallelism import fits_broadcast
 from procurement_data_pipeline_spark.session import configure_runtime
@@ -59,6 +69,44 @@ _NTZ_TO_LTZ: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
+# Confs that change what parquet schema inference returns for one file.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    _NANOS_CONF,
+    "spark.sql.caseSensitive",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_MAX = 64
+_SCHEMAS_LOCK = threading.Lock()  # builders load tables from many threads
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local file's schema once
+    per process. The key is file identity, not content: a file rewritten in
+    place changes size or mtime and is inferred again. Anything that is not
+    a local regular file (directory, remote URI, missing path) takes the
+    plain inferring read, so a missing table still raises
+    ``AnalysisException``."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns, confs)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        if len(_SCHEMAS) >= _SCHEMAS_MAX:
+            del _SCHEMAS[next(iter(_SCHEMAS))]
+        _SCHEMAS[key] = df.schema
+    return df
+
 
 def _footer_has_nanos(path: str) -> bool:
     """Cheap local footer probe: does any column carry timestamp[ns]?
@@ -102,7 +150,7 @@ def _read_nanos_tolerant(spark: SparkSession, path: str) -> DataFrame:
     if _footer_has_nanos(path):
         return _read_with_conf()
     try:
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
     except Exception as e:  # noqa: BLE001 — dispatch on the parquet error
         msg = str(e)
         if "PARQUET_TYPE_ILLEGAL" not in msg and "TIMESTAMP(NANOS" not in msg:
@@ -114,7 +162,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure_runtime(spark)
     ts_cols = _TS_COLS.get(name)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = _read_nanos_tolerant(spark, path) if ts_cols else spark.read.parquet(path)
+    df = _read_nanos_tolerant(spark, path) if ts_cols else _read_parquet(spark, path)
     from pyspark.sql import functions as F
 
     dtypes = dict(df.dtypes)

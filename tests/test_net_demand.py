@@ -266,3 +266,99 @@ def test_present_net_demand_output_order(spark, sf_dir):
         (r.supplier_id, r.supplier_priority, -r.net_demand) for r in rows
     ]
     assert keys == sorted(keys)
+
+
+def test_one_pass_chain_equals_view_chain(spark, tmp_path):
+    """The headline's one product-grain aggregate (queries/parity.py) must
+    equal the operator chain over the derived views on the same files.
+
+    * part 1: suppliers 10 and 11 cost 10.0045 and 10.001, which floor to
+      the same 1000 cents, so the LOWER supplier id wins although 11 is
+      cheaper before flooring;
+    * part 2: no demand-window rows; its cheapest supplier (13) only ships
+      after the window, which still counts for the cost ranking;
+    * part 3: no pre-cutoff rows, so safety_stock falls back to
+      safety_stock_level (p_size * 10);
+    * part 4: stock covers demand, so the clamp drops it;
+    * part 5: no lineitem rows, so no supplier and no output row.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from procurement_data_pipeline_spark.queries.parity import _net_demand
+    from procurement_data_pipeline_spark.sources import procurement_views as pv
+
+    pre, win, post = (
+        dt.datetime(1997, 12, 15),
+        dt.datetime(1998, 1, 10),
+        dt.datetime(1998, 3, 1),
+    )
+    # (orderkey, partkey, suppkey, quantity, extendedprice, shipdate)
+    rows = [
+        (1, 1, 10, 2.0, 20.009, pre),
+        (2, 1, 11, 1.0, 10.001, pre),
+        (3, 1, 12, 5.0, 100.0, win),
+        (4, 2, 12, 4.0, 8.0, pre),
+        (5, 2, 13, 3.0, 3.0, post),
+        (6, 3, 11, 7.0, 70.0, win),
+        (7, 3, 10, 2.0, 30.0, win),
+        (8, 4, 10, 50.0, 500.0, pre),
+        (9, 4, 11, 50.0, 600.0, pre),
+    ]
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array(cols[0], pa.int64()),
+                "l_partkey": pa.array(cols[1], pa.int64()),
+                "l_suppkey": pa.array(cols[2], pa.int64()),
+                "l_quantity": pa.array(cols[3], pa.float64()),
+                "l_extendedprice": pa.array(cols[4], pa.float64()),
+                "l_shipdate": pa.array(cols[5], pa.timestamp("us")),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "p_partkey": pa.array([1, 2, 3, 4, 5], pa.int64()),
+                "p_name": [f"part {i}" for i in range(1, 6)],
+                "p_size": pa.array([1, 2, 3, 4, 5], pa.int32()),
+            }
+        ),
+        str(tmp_path / "part.parquet"),
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "s_suppkey": pa.array([10, 11, 12, 13], pa.int64()),
+                "s_name": [f"supplier {i}" for i in (10, 11, 12, 13)],
+            }
+        ),
+        str(tmp_path / "supplier.parquet"),
+    )
+    sf = str(tmp_path)
+
+    one_pass = _net_demand(spark, sf)
+    views = net_demand(
+        pv.orders(spark, sf),
+        pv.inventory(spark, sf),
+        pv.products(spark, sf),
+        pv.suppliers(spark, sf),
+        pv.product_suppliers(spark, sf),
+        pv.DEMAND_FROM,
+        pv.DEMAND_TO,
+        pv.CALC_DATE,
+    )
+    assert one_pass.schema == views.schema
+    got = sorted(one_pass.collect())
+    assert got == sorted(views.collect())
+    by_pid = {r.product_id: r for r in got}
+    assert set(by_pid) == {1, 2, 3}
+    assert (by_pid[1].supplier_id, by_pid[1].unit_cost) == (10, 10.0)
+    assert by_pid[1].net_demand == 5 + 22 - (3 - 10)
+    assert (by_pid[2].supplier_id, by_pid[2].unit_cost) == (13, 1.0)
+    assert by_pid[2].net_demand == 0 + 24 - (4 - 5)
+    assert by_pid[3].net_demand == 9 + 30
+    assert {r.supplier_priority for r in got} == {1}
