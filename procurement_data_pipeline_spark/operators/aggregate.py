@@ -29,34 +29,19 @@ def aggregate_orders(
     )
 
 
-def demand_window(
-    orders: DataFrame,
-    date_from: str,
-    date_to: str,
-    include_order_count: bool = True,
-) -> DataFrame:
+def demand_window(orders: DataFrame, date_from: str, date_to: str) -> DataFrame:
     """Window-total demand per product (the net-demand chain's first CTE,
 
     reference docker/dags/sql/net_demand.sql:4-12 with a range instead of a
-    single-day equality — same partition-pruning shape).
-
-    ``include_order_count=False`` drops the ``COUNT(DISTINCT order_id)``
-    column. The reference CTE declares it (net_demand.sql:8) but nothing
-    downstream reads it (only total_ordered is joined, net_demand.sql:50-54).
-    Catalyst's column pruning does elide the unused distinct in the chain
-    queries today (verified by plan diff — pruning runs before
-    RewriteDistinctAggregates); the flag makes that contract explicit in
-    the logical plan instead of leaning on optimizer behavior, and protects
-    any future consumer that projects the aggregate through an
-    optimization barrier. Callers that materialize the daily table keep
-    the default.
+    single-day equality — same partition-pruning shape). The reference CTE
+    also declares ``COUNT(DISTINCT order_id)`` (net_demand.sql:8), but
+    nothing downstream reads it (only total_ordered is joined,
+    net_demand.sql:50-54), so it is not computed.
     """
     df = orders.filter(
         (F.col("order_date") >= F.lit(date_from).cast("date"))
         & (F.col("order_date") < F.lit(date_to).cast("date"))
     )
-    aggs = [F.sum("quantity").cast("int").alias("total_demand")]
-    if include_order_count:
-        aggs.append(F.countDistinct("order_id").cast("int").alias("order_count"))
-    return df.groupBy("product_id").agg(*aggs)
-
+    return df.groupBy("product_id").agg(
+        F.sum("quantity").cast("int").alias("total_demand")
+    )

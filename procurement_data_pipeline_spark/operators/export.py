@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 from datetime import datetime, timezone
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,16 +55,29 @@ def supplier_orders(net_demand: DataFrame, order_date: str, data_date: str) -> D
     )
 
 
+def sidecar_free_fs(spark, path_str: str):
+    """``(path, fs)`` for writing ``path_str`` without ``.crc`` sidecars:
+    the consumers of the JSON exports and their archive list the directory
+    and expect exactly the files the reference writes.
+
+    ``getFileSystem`` returns a JVM-wide cached instance that every later
+    write in the process shares, so instead of switching its checksums off
+    this returns the raw file system under a checksumming one (local
+    ``file:``); other file systems come back as they are."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path_str)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if is_instance_of(
+        spark._sc._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"
+    ):
+        fs = fs.getRawFileSystem()
+    return p, fs
+
+
 def _write_text_hadoop(spark, path_str: str, text: str) -> None:
     """Create/overwrite a small text file through the Hadoop FileSystem API
     (parents auto-created), so the JSON sinks work wherever the warehouse
     lives — file://, hdfs://, s3a:// — like every other warehouse write."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    # No .crc sidecars for the JSON exports: consumers list the directory
-    # and expect exactly the supplier_*.json files the reference writes.
-    fs.setWriteChecksum(False)
+    p, fs = sidecar_free_fs(spark, path_str)
     out = fs.create(p, True)
     try:
         out.write(bytearray(text.encode("utf-8")))

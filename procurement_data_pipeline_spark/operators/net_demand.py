@@ -79,11 +79,10 @@ def net_demand(
     estimated_cost is pinned to DECIMAL(18,2) as net_demand_insert.sql:66
     pins its insert cast.
     """
-    # order_count is declared by the reference CTE but never consumed by the
-    # chain (net_demand.sql:8 vs :50-54) — request only total_demand so the
-    # one-shuffle demand branch is guaranteed by the logical plan itself,
-    # not by the optimizer's pruning (see demand_window docstring).
-    daily = demand_window(orders, date_from, date_to, include_order_count=False)
+    # total_demand only: the reference CTE's order_count is never consumed
+    # by the chain (net_demand.sql:8 vs :50-54), so the demand branch is one
+    # shuffle by construction (see demand_window docstring).
+    daily = demand_window(orders, date_from, date_to)
     parts = (
         preferred_suppliers(product_suppliers)
         .join(daily, "product_id", "left")

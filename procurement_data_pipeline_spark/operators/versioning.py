@@ -464,7 +464,13 @@ def _resolve_manifest(spark: SparkSession, table_path: str, version: int) -> dic
     fs, ckpt_p, _ = _fs_path(spark, ckpt)
     if fs.exists(ckpt_p):
         return json.loads(_read_text(spark, ckpt))
-    base = _resolve_manifest(spark, table_path, man["delta_of"])
+    return _fold_delta(_resolve_manifest(spark, table_path, man["delta_of"]), man)
+
+
+def _fold_delta(base: dict, man: dict) -> dict:
+    """Delta manifest ``man`` folded onto its RESOLVED base manifest: pure
+    manifest-dict arithmetic, no IO, so the Spark-side resolver above and
+    the SparkSession-free one in streaming/versioned_source.py share it."""
     removes = set(man.get("removes", []))
     files = [f for f in base["files"] if f not in removes] + list(man["adds"])
     out = {

@@ -7,16 +7,21 @@ EVERYTHING accepted so far, and (c) admitted atomically, without ever
 rescanning the accumulated corpus.
 
 The key design decision here is ONE table, not two. A separate
-fingerprint index (llm_ops/incremental_dedup.py) plus a data sink has an
-unclosable window: whichever of the two commits first can land while the
-other's crash loses it — duplicates or ghost fingerprints follow. This
-plan stores the fingerprint AS A COLUMN of the versioned corpus table, so
+fingerprint index plus a data sink has an unclosable window: whichever
+of the two commits first can land while the other's crash loses it —
+duplicates or ghost fingerprints follow. This plan stores the
+fingerprint AS A COLUMN of the versioned corpus table, so
 
 * the dedup anti-join reads only the fingerprint column of prior
   versions (parquet column pruning — the "index" is free),
-* data + fingerprints become visible in ONE manifest publish: a crashed
-  ingest is invisible and the re-run's anti-join re-derives the same
-  accepts — exactly-once with no coordination,
+* data + fingerprints become visible in ONE manifest publish, and that
+  publish is pinned to the snapshot the anti-join read
+  (``expected_base``): a crashed ingest is invisible, and an ingest
+  whose read went stale because another ingest committed in between
+  raises ``ConcurrentWriteError`` (operators/versioning.py) instead of
+  admitting a second copy. Either way the re-run's anti-join
+  reads the newer corpus and re-derives the right accepts —
+  exactly-once with no coordination beyond the publish itself,
 * each ingest is a version: ``table_changes(corpus, v-1, v)`` replays
   any batch's accepted rows from the manifest file diff alone (the
   pure-append CDF fast path), and time travel reproduces the corpus any
@@ -24,10 +29,12 @@ plan stores the fingerprint AS A COLUMN of the versioned corpus table, so
 
 Per-batch cost at 100 TB corpus: one audit action, which gates,
 fingerprints and min-id dedups the batch, anti-joins the batch
-fingerprints against a single-column scan of the corpus (broadcast the
-batch side — it is the small one), caches the accepted rows and counts
-all four audit numbers as one tagged union; then one append from that
-cache. The corpus data pages are never read.
+fingerprints against a single-column scan of the corpus, caches the
+accepted rows and counts all four audit numbers as one tagged union;
+then one append from that cache. AQE broadcasts the corpus fingerprint
+column while it is under the broadcast threshold; past that the
+anti-join shuffles that one column. Only that column's pages are ever
+read; the corpus data pages never are.
 """
 
 from __future__ import annotations
@@ -70,6 +77,8 @@ def ingest_corpus_batch(
     ingestion log). Safe to re-run on crash: admission is a single
     manifest publish, so a half-finished ingest is invisible and the
     replayed anti-join rejects exactly what an earlier success admitted.
+    Raises ``ConcurrentWriteError`` when another ingest committed after
+    this one read the corpus; re-run the batch.
     """
     # the documents contract (TESTDATA.md): doc_id, text, n_chars, …
     clean, quarantined, _summary = check(
@@ -83,11 +92,13 @@ def ingest_corpus_batch(
     fp = clean.select(fingerprint(text_col).alias(FINGERPRINT_COL), "*")
     keep = fp.groupBy(FINGERPRINT_COL).agg(F.min(id_col).alias(id_col))
     batch_unique = fp.join(keep, [FINGERPRINT_COL, id_col], "left_semi")
-    if latest_version(spark, corpus_path) is None:
+    # the snapshot the anti-join reads is the one the publish targets
+    base = latest_version(spark, corpus_path)
+    if base is None:
         known = None
     else:
         # column-pruned scan: only the fingerprint column's pages are read
-        known = read_table(spark, corpus_path).select(FINGERPRINT_COL)
+        known = read_table(spark, corpus_path, version=base).select(FINGERPRINT_COL)
     novel = batch_unique if known is None else batch_unique.join(
         known, FINGERPRINT_COL, "left_anti"
     )
@@ -100,7 +111,12 @@ def ingest_corpus_batch(
     )
     counts["rejected_known"] = counts["intra_batch_unique"] - counts["accepted"]
     man = versioned_write(
-        spark, accepted_full, corpus_path, mode="append", extra={"ingest": counts}
+        spark,
+        accepted_full,
+        corpus_path,
+        mode="append",
+        expected_base=base,
+        extra={"ingest": counts},
     )
     audit = dict(man["ingest"], corpus_version=man["version"])
     return accepted_full.drop(FINGERPRINT_COL), quarantined, audit

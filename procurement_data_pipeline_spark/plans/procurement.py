@@ -30,6 +30,7 @@ from procurement_data_pipeline_spark.catalog import (
 )
 from procurement_data_pipeline_spark.operators.aggregate import aggregate_orders
 from procurement_data_pipeline_spark.operators.export import (
+    sidecar_free_fs,
     supplier_orders,
     write_exceptions_json,
     write_supplier_json,
@@ -134,9 +135,10 @@ def build_daily_pipeline(
         hpath = jvm.org.apache.hadoop.fs.Path
 
         def _copy(src_str: str, dst_str: str) -> None:
-            src_p, dst_p = hpath(src_str), hpath(dst_str)
+            src_p = hpath(src_str)
             fs = src_p.getFileSystem(hconf)
-            dfs = dst_p.getFileSystem(hconf)
+            # the archive holds the exported files only, like the export
+            dst_p, dfs = sidecar_free_fs(spark, dst_str)
             # Delete-then-copy: FileUtil.copy into an EXISTING dir nests
             # src under it; removing dst first gives the rerun the same
             # replace-in-place semantics the old copytree(dirs_exist_ok)

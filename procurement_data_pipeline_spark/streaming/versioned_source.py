@@ -58,7 +58,9 @@ never a table scan and never a driver-side collect. The planner (offsets
 / partitions) runs in the data-source worker process without a
 SparkSession, so manifest IO here is pure-Python against the same JSON
 format ``operators/versioning.py`` publishes (the on-disk format is the
-contract; field semantics documented there).
+contract; field semantics documented there). The delta-chain fold, the
+file birth rule and the version width are imported from there, so both
+resolvers materialize a version identically.
 """
 
 from __future__ import annotations
@@ -75,7 +77,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
-_VERSION_WIDTH = 8  # mirrors operators/versioning.py
+from procurement_data_pipeline_spark.operators.versioning import (
+    _VERSION_WIDTH,
+    _file_birth,
+    _fold_delta,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -160,50 +166,16 @@ def read_manifest(table_path: str, version: int) -> dict:
 
 
 def resolve_manifest(table_path: str, version: int) -> dict:
-    """Pure-Python twin of versioning._resolve_manifest: materialize a
-    delta chain onto its base (preferring a vacuum-written c{N}.json
-    checkpoint), folding files, births and delete entries identically."""
+    """versioning._resolve_manifest over the pure-Python IO above: a delta
+    chain folded onto its base (preferring a vacuum-written c{N}.json
+    checkpoint) by the same ``_fold_delta``."""
     man = read_manifest(table_path, version)
     if "delta_of" not in man:
         return man
     ckpt = f"{_log_dir(table_path)}/c{version:0{_VERSION_WIDTH}d}.json"
     if _exists(ckpt):
         return json.loads(_read_text(ckpt))
-    base = resolve_manifest(table_path, man["delta_of"])
-    removes = set(man.get("removes", []))
-    files = [f for f in base["files"] if f not in removes] + list(man["adds"])
-    out = {
-        k: v
-        for k, v in man.items()
-        if k not in ("delta_of", "adds", "removes", "stats_adds", "deletes_adds")
-    }
-    out["files"] = files
-    births = {
-        f: b for f, b in base.get("births", {}).items() if f not in removes
-    }
-    births.update({f: man["version"] for f in man["adds"]})
-    if births:
-        out["births"] = births
-    deletes = list(base.get("deletes", [])) + list(man.get("deletes_adds", []))
-    if deletes:
-        out["deletes"] = deletes
-    return out
-
-
-_BIRTH_SEG = "/commit-"
-
-
-def _file_birth(births: dict | None, file_uri: str) -> int:
-    """Mirror of versioning._file_birth: manifest births map first, then
-    the immediate-parent commit-dir parse, else 0 (conservative)."""
-    if births:
-        b = births.get(file_uri)
-        if b is not None:
-            return int(b)
-    import re
-
-    m = re.search(r"/commit-(\d+)-[^/]*/[^/]+$", file_uri)
-    return int(m.group(1)) if m else 0
+    return _fold_delta(resolve_manifest(table_path, man["delta_of"]), man)
 
 
 # ---------------------------------------------------------------------------

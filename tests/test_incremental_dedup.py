@@ -1,19 +1,28 @@
-"""Incremental exact dedup against the versioned fingerprint index."""
+"""Incremental exact dedup of the corpus ingest (plans/ingestion.py)."""
 
 from __future__ import annotations
+
+import pytest
 
 from procurement_data_pipeline_spark.llm_ops.dedup import (
     drop_exact_duplicates,
 )
-from procurement_data_pipeline_spark.llm_ops.incremental_dedup import (
-    ingest_batch,
-    read_index,
+from procurement_data_pipeline_spark.operators import versioning
+from procurement_data_pipeline_spark.operators.versioning import (
+    history,
+    latest_version,
 )
-from procurement_data_pipeline_spark.operators.versioning import history
+from procurement_data_pipeline_spark.plans.ingestion import (
+    ingest_corpus_batch,
+    read_corpus,
+)
 
 
 def _batch(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(
+        [(i, t, len(t)) for i, t in rows],
+        "doc_id long, text string, n_chars long",
+    )
 
 
 def _ids(df):
@@ -22,128 +31,57 @@ def _ids(df):
 
 def test_cumulative_equals_one_shot(spark, tmp_path):
     """accepted(b1..b3) must equal drop_exact_duplicates(b1 ∪ b2 ∪ b3)
-    with min-id precedence — the incremental path changes WHEN dedup
+    with min-id precedence: the incremental path changes WHEN dedup
     happens, never WHAT survives."""
-    idx = str(tmp_path / "fpindex")
+    c = str(tmp_path / "corpus")
     b1 = _batch(spark, [(1, "alpha beta"), (2, "gamma"), (3, "alpha beta")])
     b2 = _batch(spark, [(10, "gamma"), (11, "delta"), (12, "delta")])
     b3 = _batch(spark, [(20, "alpha  BETA"), (21, "epsilon")])
-    a1, audit1 = ingest_batch(spark, b1, idx)
-    a2, audit2 = ingest_batch(spark, b2, idx)
-    a3, audit3 = ingest_batch(spark, b3, idx)
+    a1, _, audit1 = ingest_corpus_batch(spark, b1, c)
+    a2, _, audit2 = ingest_corpus_batch(spark, b2, c)
+    a3, _, audit3 = ingest_corpus_batch(spark, b3, c)
     got = _ids(a1) + _ids(a2) + _ids(a3)
     oneshot = drop_exact_duplicates(b1.unionAll(b2).unionAll(b3))
     assert sorted(got) == _ids(oneshot)
     assert audit1 == {
         "rows_in_batch": 3,
+        "quarantined": 0,
         "intra_batch_unique": 2,
         "accepted": 2,
         "rejected_known": 0,
-        "index_version": 1,
+        "corpus_version": 1,
     }
+    # "delta" twice in b2 is an intra-batch duplicate; "gamma" is known
+    assert audit2["intra_batch_unique"] == 2
     assert audit2["rejected_known"] == 1 and audit2["accepted"] == 1
-    # normalization: "alpha  BETA" is the same content as "alpha beta"
-    # only if the fingerprint normalizes — either way both paths agree
-    assert audit3["index_version"] == 3
-    # the index is the union of accepted fingerprints, first ids recorded
-    assert read_index(spark, idx).count() == len(sorted(got))
+    assert audit3["corpus_version"] == 3
+    # the corpus is exactly the union of every batch's accepted rows
+    assert _ids(read_corpus(spark, c)) == sorted(got)
 
 
-def test_crash_replay_is_idempotent(spark, tmp_path):
-    """A batch re-run after a crash BETWEEN data-sink write and index
-    publish accepts the same rows once the index commit finally lands;
-    a re-run AFTER the publish accepts nothing."""
-    idx = str(tmp_path / "fpindex")
+def test_crash_replay_is_idempotent(spark, tmp_path, monkeypatch):
+    """A batch re-run after a crash BETWEEN the data-file write and the
+    manifest publish accepts its rows once; a re-run AFTER the publish
+    accepts nothing."""
+    c = str(tmp_path / "corpus")
     b = _batch(spark, [(1, "x"), (2, "y")])
-    a1, audit1 = ingest_batch(spark, b, idx)
-    assert audit1["accepted"] == 2
-    # replay of the SAME batch: everything already indexed
-    a2, audit2 = ingest_batch(spark, b, idx)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crashed before publish")
+
+    monkeypatch.setattr(versioning, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crashed before publish"):
+        ingest_corpus_batch(spark, b, c)
+    monkeypatch.undo()
+    # the data files the crashed ingest wrote are invisible: no version
+    assert latest_version(spark, c) is None
+    a1, _, audit1 = ingest_corpus_batch(spark, b, c)
+    assert audit1["accepted"] == 2 and audit1["corpus_version"] == 1
+    assert _ids(read_corpus(spark, c)) == [1, 2]
+    # replay of the SAME batch: everything is already in the corpus
+    a2, _, audit2 = ingest_corpus_batch(spark, b, c)
     assert audit2["accepted"] == 0 and audit2["rejected_known"] == 2
     assert _ids(a2) == []
-    # history shows both ingests (the empty one too — auditable no-op)
-    assert [h["op"] for h in history(spark, idx)] == ["append", "append"]
-
-
-def test_cross_batch_precedence_keeps_first_arrival(spark, tmp_path):
-    idx = str(tmp_path / "fpindex")
-    ingest_batch(spark, _batch(spark, [(5, "same content")]), idx)
-    accepted, _ = ingest_batch(spark, _batch(spark, [(1, "same content")]), idx)
-    # the CORPUS keeps doc 5 (first arrival), even though 1 < 5 — the
-    # one-shot equivalence only holds for ids arriving in batch order
-    assert _ids(accepted) == []
-    first = read_index(spark, idx).collect()
-    assert len(first) == 1 and first[0]["first_doc_id"] == 5
-
-
-def test_raced_ingest_loses_instead_of_double_accepting(
-    spark, tmp_path, monkeypatch
-):
-    """Code-review r8: the publish is pinned to the snapshot the anti-join
-    read. An ingest whose read went stale (another ingest committed in
-    between) must lose with ConcurrentWriteError — never commit a second
-    acceptance of the same document against the newer index."""
-    import pytest as _pytest
-
-    from procurement_data_pipeline_spark.llm_ops import incremental_dedup as mod
-    from procurement_data_pipeline_spark.operators.versioning import (
-        ConcurrentWriteError,
-        latest_version,
-    )
-
-    idx = str(tmp_path / "index")
-    ingest_batch(spark, _batch(spark, [(1, "alpha")]), idx)  # index at v1
-    # simulate the race window: OUR read sees the EMPTY pre-v1 index
-    # (stale snapshot), while the commit must target v1's successor
-    monkeypatch.setattr(mod, "latest_version", lambda s, p: None)
-    with _pytest.raises(ConcurrentWriteError):
-        ingest_batch(spark, _batch(spark, [(2, "alpha")]), idx)
-    monkeypatch.undo()
-    # the index is unpoisoned: exactly one fingerprint, v1 still latest
-    assert latest_version(spark, idx) == 1
-    assert read_index(spark, idx).count() == 1
-    # and the retry against the fresh index correctly rejects the dup
-    accepted, audit = ingest_batch(spark, _batch(spark, [(2, "alpha")]), idx)
-    assert accepted.count() == 0 and audit["rejected_known"] == 1
-
-
-def test_index_is_probed_not_shuffled(spark, tmp_path):
-    """Code-review r8: the index side of the dedup join must be a
-    broadcast-probe (index scanned once, never exchanged) — a left_anti
-    with the index on the right cannot broadcast the batch, so the old
-    shape shuffled the whole index every ingest."""
-    from procurement_data_pipeline_spark.llm_ops import incremental_dedup as mod
-    from procurement_data_pipeline_spark.llm_ops.text import fingerprint
-    from pyspark.sql import functions as F
-
-    idx_path = str(tmp_path / "index")
-    ingest_batch(
-        spark, _batch(spark, [(i, f"doc {i}") for i in range(50)]), idx_path
-    )
-    batch = _batch(spark, [(100, "doc 1"), (101, "fresh")])
-    fp = batch.select(fingerprint("text").alias("fingerprint"), "*")
-    keep = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
-    batch_unique = fp.join(keep, ["fingerprint", "doc_id"], "left_semi")
-    idx = read_index(spark, idx_path).select("fingerprint")
-    known = idx.join(
-        F.broadcast(batch_unique.select("fingerprint")),
-        "fingerprint",
-        "left_semi",
-    )
-    novel = batch_unique.join(F.broadcast(known), "fingerprint", "left_anti")
-    # the index-probing semi-join is the TOP node: a broadcast hash join
-    # with BuildRight — the batch fingerprints are the built (broadcast)
-    # side, the index is streamed, never exchanged. An SMJ may appear
-    # DEEPER in the plan (the intra-batch min-id semi-join, bounded by
-    # the batch) but must not be the join touching the index.
-    kplan = known._jdf.queryExecution().executedPlan().toString()
-    first_bhj = kplan.find("BroadcastHashJoin")
-    first_smj = kplan.find("SortMergeJoin")
-    assert first_bhj != -1 and "LeftSemi, BuildRight" in kplan
-    assert first_smj == -1 or first_bhj < first_smj
-    # and the final anti-join broadcasts `known` (LeftAnti, BuildRight at
-    # the top) — never a sort-merge of the dedup relation
-    nplan = novel._jdf.queryExecution().executedPlan().toString()
-    assert nplan.find("BroadcastHashJoin") != -1
-    assert "LeftAnti, BuildRight" in nplan
-    assert "SortMergeJoin LeftAnti" not in nplan
+    assert _ids(read_corpus(spark, c)) == [1, 2]
+    # history shows both ingests (the empty one too: an auditable no-op)
+    assert [h["op"] for h in history(spark, c)] == ["append", "append"]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from procurement_data_pipeline_spark.llm_ops.dedup import (
@@ -9,7 +10,12 @@ from procurement_data_pipeline_spark.llm_ops.dedup import (
 )
 from procurement_data_pipeline_spark.llm_ops.text import fingerprint
 from procurement_data_pipeline_spark.operators.cdf import table_changes
-from procurement_data_pipeline_spark.operators.versioning import history
+from procurement_data_pipeline_spark.operators.versioning import (
+    ConcurrentWriteError,
+    history,
+    latest_version,
+)
+from procurement_data_pipeline_spark.plans import ingestion
 from procurement_data_pipeline_spark.plans.ingestion import (
     ingest_corpus_batch,
     read_corpus,
@@ -85,6 +91,72 @@ def test_replay_after_success_is_a_noop(spark, tmp_path):
     accepted, _, audit = ingest_corpus_batch(spark, b, c)
     assert audit["accepted"] == 0 and audit["rejected_known"] == 2
     assert _ids(read_corpus(spark, c)) == [1, 2]
+    # the empty replay is still a version: an auditable no-op
+    assert [h["op"] for h in history(spark, c)] == ["append", "append"]
+
+
+def test_cross_batch_precedence_keeps_first_arrival(spark, tmp_path):
+    c = str(tmp_path / "corpus")
+    ingest_corpus_batch(spark, _batch(spark, [(5, "same content")]), c)
+    accepted, _, audit = ingest_corpus_batch(
+        spark, _batch(spark, [(1, "same content")]), c
+    )
+    # the corpus keeps doc 5 (first arrival) even though 1 < 5: the
+    # one-shot equivalence holds only for ids arriving in batch order
+    assert _ids(accepted) == [] and audit["rejected_known"] == 1
+    assert _ids(read_corpus(spark, c)) == [5]
+
+
+def _texts(spark, c):
+    return sorted(r["text"] for r in read_corpus(spark, c).collect())
+
+
+def test_raced_ingest_loses_instead_of_double_accepting(
+    spark, tmp_path, monkeypatch
+):
+    """The publish is pinned to the snapshot the anti-join read: an ingest
+    whose read went stale must raise, never commit a second copy of a
+    document against the newer corpus."""
+    c = str(tmp_path / "corpus")
+    ingest_corpus_batch(spark, _batch(spark, [(1, "alpha")]), c)  # v1
+    racer = _batch(spark, [(2, "alpha"), (3, "fresh")])
+    # this ingest's snapshot predates v1: it saw an empty corpus
+    monkeypatch.setattr(ingestion, "latest_version", lambda spark, path: None)
+    with pytest.raises(ConcurrentWriteError):
+        ingest_corpus_batch(spark, racer, c)
+    monkeypatch.undo()
+    assert latest_version(spark, c) == 1
+    assert _texts(spark, c) == ["alpha"]
+    # the re-run reads v1 and rejects the duplicate
+    accepted, _, audit = ingest_corpus_batch(spark, racer, c)
+    assert _ids(accepted) == [3] and audit["rejected_known"] == 1
+    assert audit["corpus_version"] == 2
+    assert _texts(spark, c) == ["alpha", "fresh"]
+
+
+def test_commit_between_read_and_publish_raises(spark, tmp_path, monkeypatch):
+    """Another ingest commits after this one's audit action has run its
+    anti-join against v1 and before this one publishes."""
+    c = str(tmp_path / "corpus")
+    docs = [(i, f"doc {i}") for i in range(10)]
+    ingest_corpus_batch(spark, _batch(spark, docs), c)  # v1
+    publish = ingestion.versioned_write
+
+    def raced_publish(*args, **kwargs):
+        monkeypatch.setattr(ingestion, "versioned_write", publish)
+        other = _batch(spark, [(110, "doc 110"), (111, "doc 111")])
+        ingest_corpus_batch(spark, other, c)  # v2
+        return publish(*args, **kwargs)
+
+    monkeypatch.setattr(ingestion, "versioned_write", raced_publish)
+    mine = _batch(spark, [(100, "doc 100"), (110, "doc 110")])
+    with pytest.raises(ConcurrentWriteError):
+        ingest_corpus_batch(spark, mine, c)
+    assert latest_version(spark, c) == 2
+    texts = _texts(spark, c)
+    assert len(texts) == len(set(texts)) == 12
+    accepted, _, _ = ingest_corpus_batch(spark, mine, c)
+    assert _ids(accepted) == [100]
 
 
 def test_fused_audit_equals_separate_counts(spark, tmp_path):

@@ -150,7 +150,10 @@ def test_daily_pipeline_end_to_end(spark, tmp_path):
 
     # archive copied — supplier orders AND the exceptions log
     # (procurement_dag.py:293-306 uploads both)
-    assert os.path.isdir(wh.path("processed/supplier_orders", "2026-01-15"))
+    assert sorted(os.listdir(wh.path("processed/supplier_orders", "2026-01-15"))) == files
+    assert os.listdir(wh.path("processed/logs_exceptions", EXEC_DATE)) == [
+        f"exceptions_{EXEC_DATE}.json"
+    ]
     assert os.path.isfile(
         wh.path("processed/logs_exceptions", EXEC_DATE, f"exceptions_{EXEC_DATE}.json")
     )

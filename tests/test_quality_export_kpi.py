@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 from decimal import Decimal
 
 import pytest
@@ -167,3 +168,21 @@ def test_order_status_breakdown(spark):
     )
     got = {r.status: r.order_count for r in order_status_breakdown(orders).collect()}
     assert got == {"PENDING": 2, "SHIPPED": 1}
+
+
+def test_export_leaves_checksums_on_for_later_writes(spark, nd, tmp_path):
+    """The JSON export skips .crc sidecars without switching checksums off
+    on the JVM-wide cached file system that every later write shares."""
+    out = supplier_orders(nd, "2026-01-16", "2026-01-15")
+    export_dir = tmp_path / "export"
+    write_supplier_json(out, str(export_dir), generated_at="2026-01-15T22:00:00")
+    exc = spark.createDataFrame(
+        [("MISSING_INVENTORY", "MEDIUM", 7)],
+        "type string, severity string, product_id int",
+    )
+    write_exceptions_json(exc, str(export_dir / "exceptions.json"), "2026-01-15")
+    assert sorted(os.listdir(export_dir)) == [
+        "exceptions.json", "supplier_1.json", "supplier_2.json"
+    ]
+    nd.write.parquet(str(tmp_path / "after"))
+    assert any(n.endswith(".crc") for n in os.listdir(tmp_path / "after"))
