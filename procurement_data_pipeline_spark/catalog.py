@@ -143,10 +143,6 @@ def sync_partitions(spark: SparkSession, db: str, tables: tuple[str, ...]) -> No
         spark.catalog.recoverPartitions(f"{db}.{t}")
 
 
-def list_tables(spark: SparkSession, db: str = "procurement") -> list[str]:
-    return [t.name for t in spark.catalog.listTables(db)]
-
-
 def recover_swap(spark: SparkSession, path: str) -> bool:
     """Recover a directory swap interrupted between its two renames.
 

@@ -30,9 +30,6 @@ from procurement_data_pipeline_spark.llm_ops.text import (
     words,
 )
 
-MERSENNE_PRIME = (1 << 61) - 1
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: one row per distinct normalized content.
 

@@ -138,17 +138,6 @@ def kmv_estimate(n_kept: Column, kth_hash: Column, k: int) -> Column:
     )
 
 
-def estimate_from_sketch(n_kept: int, kth_hash_hex: str, k: int) -> float:
-    """Driver-side twin of :func:`kmv_estimate` for collected sketches —
-    the ONE place the 52-bit prefix contract is applied to plain Python
-    values (operators/joinplanner consumes this; keeping it here means a
-    prefix-width tune cannot silently diverge the planner's estimates
-    from the queries')."""
-    if n_kept < k:
-        return float(n_kept)
-    return (k - 1) / (int(kth_hash_hex[:_FRAC_HEX_CHARS], 16) / _FRAC_DENOM)
-
-
 def kmv_estimate_sql(n_kept: str, kth_hash: str, k: int) -> str:
     """DuckDB-side twin of :func:`kmv_estimate`."""
     return (

@@ -18,10 +18,11 @@ consumer harness:
   invocation, so the downstream sees consistent version boundaries, never
   a torn prefix of somebody's commit.
 
-This is the missing half of incremental view maintenance: ivm.py reacts
-to raw parquet appends; this consumer reacts to VERSIONED tables,
-including merges and deletes (the handler receives the full changelog
-with change_type), at whatever cadence the caller polls.
+This is the missing half of incremental view maintenance:
+incremental.py's rollups react to new date partitions of raw parquet
+facts; this consumer reacts to VERSIONED tables, including merges and
+deletes (the handler receives the full changelog with change_type), at
+whatever cadence the caller polls.
 """
 
 from __future__ import annotations

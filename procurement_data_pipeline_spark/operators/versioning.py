@@ -1,7 +1,7 @@
 """Multi-version parquet tables: snapshot isolation, time travel, rollback.
 
-The repo's manifest-committed operators (ivm.py's join views, erasure.py's
-targeted rewrites, incremental.py's rollups) each keep ONE current state.
+The repo's manifest-committed operators (erasure.py's targeted rewrites,
+incremental.py's rollups) each keep ONE current state.
 This module adds the remaining table-format capability those leave on the
 table — the Delta/Iceberg snapshot model, over plain parquet and the
 Hadoop FileSystem API alone (closest reference analogue: the
@@ -16,7 +16,7 @@ capability):
   file list is published atomically;
 * readers resolve a manifest FIRST and read exactly its files — a writer
   crashed before publishing leaves an orphan commit directory that no
-  reader can observe (same invisibility argument as ivm.read_view);
+  reader can observe;
 * ``read_table(..., version=k)`` is time travel; ``rollback`` publishes a
   NEW version whose file list equals an old one (history is append-only —
   an audit can always see that the rollback happened and when);

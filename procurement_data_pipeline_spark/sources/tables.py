@@ -40,9 +40,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # Timestamp-bearing columns per table. The corpus has shipped `events.ts`
 # under three encodings across driver regenerations — TIMESTAMP(NANOS)
 # (the vectorized reader rejects it outright → read nanos as long),

@@ -1,16 +1,11 @@
-"""snapshot_diff changelog semantics (all three arms) and the date-range
-backfill planner (chunked convergence, failure isolation, resumability)."""
+"""snapshot_diff changelog semantics (all three arms), observed-write
+telemetry, point-in-time joins, SCD2 interval compaction and dwell shares."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from procurement_data_pipeline_spark.operators.cdc import snapshot_diff
-from procurement_data_pipeline_spark.operators.incremental import verify_incremental
-from procurement_data_pipeline_spark.plans.backfill import (
-    backfill_rollup,
-    date_chunks,
-)
 from procurement_data_pipeline_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -50,77 +45,6 @@ def test_snapshot_diff_rejects_unknown_compare_cols(spark):
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "nope" in str(e)
-
-
-# ------------------------------------------------------------- backfill
-
-
-def test_date_chunks_partition_the_range():
-    chunks = date_chunks("2024-01-01", "2024-02-15", chunk_days=10)
-    flat = [d for c in chunks for d in c]
-    assert flat[0] == "2024-01-01" and flat[-1] == "2024-02-15"
-    assert len(flat) == len(set(flat)) == 46
-    assert all(len(c) <= 10 for c in chunks) and len(chunks) == 5
-
-
-def _rollup(facts):
-    return facts.groupBy(
-        F.col("ts").cast("date").cast("string").alias("day"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-
-
-def test_backfill_converges_in_chunks(spark, tmp_path):
-    ev = load_table(spark, SF_DIR, "events")
-    lo, hi = ev.agg(
-        F.min(F.col("ts").cast("date")), F.max(F.col("ts").cast("date"))
-    ).collect()[0]
-    rollup_dir = str(tmp_path / "rollup")
-    results = backfill_rollup(
-        spark,
-        ev,
-        _rollup,
-        rollup_dir,
-        "day",
-        str(lo),
-        str(hi),
-        chunk_days=7,
-        fact_date_col="ts",
-    )
-    assert all(r.status == "success" for r in results.values())
-    assert len(results) == ((hi - lo).days + 1 + 6) // 7
-    audit = verify_incremental(spark, ev, _rollup, rollup_dir, "day")
-    assert audit.count() == 0, audit.collect()[:5]
-
-
-def test_backfill_failed_chunk_isolates_and_resumes(spark, tmp_path):
-    ev = load_table(spark, SF_DIR, "events")
-    lo, hi = ev.agg(
-        F.min(F.col("ts").cast("date")), F.max(F.col("ts").cast("date"))
-    ).collect()[0]
-    rollup_dir = str(tmp_path / "rollup")
-    calls = {"n": 0}
-
-    def flaky_rollup(facts):
-        calls["n"] += 1
-        if calls["n"] == 2:  # second chunk's only attempt dies
-            raise RuntimeError("transient executor loss")
-        return _rollup(facts)
-
-    results = backfill_rollup(
-        spark, ev, flaky_rollup, rollup_dir, "day",
-        str(lo), str(hi), chunk_days=7, fact_date_col="ts", retries=0,
-    )
-    statuses = [r.status for r in results.values()]
-    assert statuses.count("failed") == 1
-    assert statuses.count("success") == len(statuses) - 1  # no skips: independent
-    # Resume: re-run the whole range; idempotent overwrites repair the hole.
-    results2 = backfill_rollup(
-        spark, ev, _rollup, rollup_dir, "day",
-        str(lo), str(hi), chunk_days=7, fact_date_col="ts",
-    )
-    assert all(r.status == "success" for r in results2.values())
-    audit = verify_incremental(spark, ev, _rollup, rollup_dir, "day")
-    assert audit.count() == 0
 
 
 # ------------------------------------------------------------ telemetry

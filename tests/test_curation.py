@@ -17,6 +17,7 @@ from procurement_data_pipeline_spark.llm_ops.curation import (
     pack_sequences,
     repetition_metrics,
 )
+from procurement_data_pipeline_spark.registry import load_all
 from procurement_data_pipeline_spark.sources.tables import load_table
 
 
@@ -347,3 +348,27 @@ def test_pack_two_level_equals_single_window_reference(spark, sf_dir):
     }
     assert got == want
     assert len(got) == docs.count()  # exhaustive, exactly once
+
+
+def test_interleaved_shuffle_round_robins_sources(spark, sf_dir):
+    """Any global-order prefix sees per-source counts within 1 of each
+    other until a source exhausts, and the ordering is deterministic."""
+    q = load_all()["docs_interleaved_shuffle"]
+    rows = sorted(
+        ((r["global_pos"], r["source"]) for r in q.builder(spark, sf_dir).collect())
+    )
+    totals: dict[str, int] = {}
+    for _, s in rows:
+        totals[s] = totals.get(s, 0) + 1
+    seen: dict[str, int] = dict.fromkeys(totals, 0)
+    for pos, s in rows:
+        seen[s] += 1
+        live_min = min(
+            seen[t] for t in totals if seen[t] < totals[t] or t == s
+        )
+        assert seen[s] - live_min <= 1  # round-robin fairness
+    assert [p for p, _ in rows] == list(range(len(rows)))  # dense 0-based
+    again = sorted(
+        ((r["global_pos"], r["source"]) for r in q.builder(spark, sf_dir).collect())
+    )
+    assert again == rows  # deterministic

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from procurement_data_pipeline_spark.catalog import (
     Warehouse,
-    list_tables,
     register_tables,
     sync_partitions,
 )
@@ -208,7 +207,10 @@ def test_catalog_registration_and_partition_discovery(spark, tmp_path):
     staged = spark.read.option("header", True).csv(wh.path("staging", "orders"))
     assert staged.count() == 40
     register_tables(spark, wh)
-    assert set(list_tables(spark)) >= {"orders", "inventory"}
+    assert {t.name for t in spark.catalog.listTables("procurement")} >= {
+        "orders",
+        "inventory",
+    }
     got = spark.table("procurement.orders")
     assert got.select("order_date").distinct().count() == 2
     # partition-pruned read
